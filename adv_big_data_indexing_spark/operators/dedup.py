@@ -419,9 +419,6 @@ def _lsh_pair_stats(
                 "raise/unset the ceiling to pay its quadratic pairs"
             ),
         )
-        sized = sized.where(
-            F.assert_true(F.col("bsz") <= F.lit(ceiling), msg).isNull()
-        )
 
     # Materialize the sized band rows ONCE before the tier split (r13,
     # guide §3.3/§5): the split's three consumers (the small-bucket
@@ -484,6 +481,13 @@ def _lsh_pair_stats(
         _pending_lsh_persists.clear()
         sized = sized.persist(StorageLevel.DISK_ONLY)
         _pending_lsh_persists.append(sized)
+    if ceiling > 0:
+        # after the persist, so the persisted frame holds no assert and
+        # can never raise itself: only the tier consumers' filtered view
+        # of it does
+        sized = sized.where(
+            F.assert_true(F.col("bsz") <= F.lit(ceiling), msg).isNull()
+        )
 
     # ---- tier 1: in-row expansion of small buckets
     grouped = (

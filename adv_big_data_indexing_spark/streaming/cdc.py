@@ -12,21 +12,35 @@ Spark-first replacement (SURVEY.md §3.1):
   {key, op, seq, doc} (op ∈ insert|update|delete — delete via queue is
   the reference's unimplemented V2 requirement, README.md:118; shipped
   here),
-- the consumer is ONE Structured Streaming job: readStream →
-  foreachBatch MERGE into the parquet entity store,
-- exactly-once: checkpointed source offsets + an idempotent,
-  deterministic merge (max-seq wins per key; replays converge),
+- the consumer is ONE Structured Streaming job (``run_document_indexer``):
+  readStream → foreachBatch validate → shred → replace,
 - the 200 ms visibility poll disappears — micro-batch commit IS the
   visibility barrier (processAllAvailable ≈ awaiting the queue drain).
 
-Scale: foreachBatch merges by key; with the store bucketed by key the
-merge is co-partitioned. The batch dedup (row_number over key) keeps
-state out of the streaming engine, so no state-store growth.
+The one replace rule. A nested document is the unit that is shredded,
+reassembled and replaced. Its closure is every entity fragment whose
+``root_key`` is the document's key, plus the reconstructed view row whose
+``id`` is that key. A valid upsert or a delete replaces its root's whole
+closure, in the entity store and in the view, iff its ``seq`` is ≥ the
+root's stored ``seq`` (the max ``seq`` over the root's fragments; a root
+with no fragments has no stored ``seq``, and any record for it wins).
+Within a micro-batch the highest ``seq`` per root is the record. Ties
+win, so a replayed batch rewrites what it wrote before and heals a batch
+that crashed between the two swaps; a late lower-seq record changes
+nothing. A delete leaves no tombstone, so an upsert that arrives after
+the delete of its root wins whatever its ``seq``.
+Exactly-once follows from checkpointed source offsets plus this
+idempotent rule: a replay from a fresh checkpoint converges to the same
+stores.
+
+Scale: the winners (one row per root touched by the batch) are the only
+state computed against the store, and they are batch-sized.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -58,70 +72,6 @@ def enqueue(spark: SparkSession, queue_dir: str, records: list[dict]) -> None:
     df.coalesce(1).write.mode("append").json(queue_dir)
 
 
-def apply_cdc_batch(store_dir: str, batch: DataFrame, batch_id: int) -> None:
-    """Idempotent MERGE of one micro-batch into the parquet entity store.
-
-    Replay-safe by construction: (1) within-batch dedup keeps the max
-    seq per key; (2) the union with the current store re-resolves by
-    seq, so applying the same batch twice is a no-op (the reference
-    leans on ES upsert-by-_id for this, rabbitMq.ts:44-48).
-    """
-    spark = batch.sparkSession
-    w = Window.partitionBy("key").orderBy(F.col("seq").desc())
-    latest = (
-        batch.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-    try:
-        current = spark.read.parquet(store_dir)
-        merged = (
-            current.unionByName(latest)
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-    except Exception:  # first batch: store does not exist yet
-        merged = latest
-
-    survivors = merged.filter(F.col("op") != "delete")
-    # write-then-swap: parquet has no transactional MERGE, so stage the
-    # new store and atomically rename (a Delta MERGE on a real deployment).
-    tmp = f"{store_dir}__stage_{batch_id}_{uuid.uuid4().hex[:8]}"
-    survivors.write.mode("overwrite").parquet(tmp)
-    old = f"{store_dir}__old_{batch_id}_{uuid.uuid4().hex[:8]}"
-    if os.path.exists(store_dir):
-        os.rename(store_dir, old)
-    os.rename(tmp, store_dir)
-    if os.path.exists(old):
-        import shutil
-
-        shutil.rmtree(old, ignore_errors=True)
-
-
-def run_indexer(
-    spark: SparkSession,
-    queue_dir: str,
-    store_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """OP-A12 consumer: the streaming index-maintenance job."""
-    stream = (
-        spark.readStream.schema(CDC_SCHEMA)
-        .option("maxFilesPerTrigger", 16)
-        .json(queue_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(
-            lambda b, i: apply_cdc_batch(store_dir, b, i)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def drain(query: StreamingQuery, timeout_sec: int = 120) -> None:
     """OP-G7 analog: await queue visibility. The reference polls ES every
     200 ms (apiLogicForCRUD.ts:47-58); here commit == visibility, so
@@ -129,13 +79,23 @@ def drain(query: StreamingQuery, timeout_sec: int = 120) -> None:
     query.awaitTermination(timeout_sec)
 
 
-def read_store(spark: SparkSession, store_dir: str) -> DataFrame:
-    return spark.read.parquet(store_dir)
-
-
-# ---------------------------------------------------------------------------
-# full document write path as one streaming job (SURVEY §3.1 "Spark shape")
-# ---------------------------------------------------------------------------
+def _replace(path: str, key: str, winners: DataFrame, fresh: DataFrame, batch_id: int) -> None:
+    """Swap ``path`` for its rows outside the winners' closures (``key``
+    not a winning root) plus ``fresh``. Parquet has no transactional
+    MERGE, so stage the new store and rename it in (a Delta MERGE on a
+    real deployment)."""
+    if os.path.exists(path):
+        kept = winners.sparkSession.read.parquet(path).join(
+            winners.select(F.col("root_key").alias(key)), key, "left_anti"
+        )
+        fresh = kept.unionByName(fresh)
+    tag = f"{batch_id}_{uuid.uuid4().hex[:8]}"
+    stage, old = f"{path}__stage_{tag}", f"{path}__old_{tag}"
+    fresh.write.mode("overwrite").parquet(stage)
+    if os.path.exists(path):
+        os.rename(path, old)
+    os.rename(stage, path)
+    shutil.rmtree(old, ignore_errors=True)
 
 
 def run_document_indexer(
@@ -150,38 +110,63 @@ def run_document_indexer(
     """POST /plan, end-to-end, streaming: each micro-batch of CDC records
     carrying raw plan JSON is validated against the registered schema
     (plans/json_schema_compiler), invalid docs are routed to a rejects
-    table (the 400 path, with their violation list), valid docs are
-    shredded (operators/shred) and their entity fragments merged into
-    the store by (id, seq) — replacing the reference's 10-step
-    Redis→AMQP→poll→ES choreography (apiLogicForCRUD.ts:82-144) with one
-    exactly-once pipeline.
+    table (the 400 path, with their violation list), and every winning
+    upsert or delete replaces its root's closure under the module's one
+    rule: the shredded fragments (operators/shred) in the entity store
+    and, with ``reconstructed_dir``, the nested ETag-stamped view row —
+    replacing the reference's 10-step Redis→AMQP→poll→ES choreography
+    (apiLogicForCRUD.ts:82-144) with one exactly-once pipeline.
     """
+    from adv_big_data_indexing_spark.operators.reconstruct import reconstruct, with_etag
     from adv_big_data_indexing_spark.operators.shred import shred
     from adv_big_data_indexing_spark.plans.json_schema_compiler import validate
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        w = Window.partitionBy("key").orderBy(F.col("seq").desc())
-        latest = (
-            batch.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        upserts = latest.filter(F.col("op") != "delete")
+        upserts = batch.filter(F.col("op") != "delete")
         v = validate(upserts.select("key", "seq", F.col("doc").alias("raw")), schema)
         bad = v.filter(~F.col("is_valid")).select(
             "key", "seq", "violations", F.col("raw").alias("doc")
         )
         if bad.take(1):
             bad.write.mode("append").parquet(rejects_dir)
-        good = v.filter(F.col("is_valid"))
-        tables = shred(good.select("doc.*"))
-        # entity fragments inherit the CDC seq of their root document
-        seq_of = good.select(
-            F.concat_ws("_", F.lit("plan"), F.col("doc.objectId")).alias("root_key"),
-            "seq",
+        records = (
+            v.filter(F.col("is_valid"))
+            .select(
+                F.concat_ws("_", F.lit("plan"), F.col("doc.objectId")).alias("root_key"),
+                "seq",
+                "doc",
+            )
+            .unionByName(
+                batch.filter(F.col("op") == "delete").select(
+                    F.col("key").alias("root_key"),
+                    "seq",
+                    F.lit(None).cast(v.schema["doc"].dataType).alias("doc"),
+                )
+            )
         )
+        w = Window.partitionBy("root_key").orderBy(F.col("seq").desc())
+        winners = (
+            records.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") == 1)
+            .drop("__rn")
+        )
+        if os.path.exists(entities_dir):
+            stored = (
+                spark.read.parquet(entities_dir)
+                .groupBy("root_key")
+                .agg(F.max("seq").alias("stored_seq"))
+            )
+            winners = (
+                winners.join(stored, "root_key", "left")
+                .filter(F.col("stored_seq").isNull() | (F.col("seq") >= F.col("stored_seq")))
+                .drop("stored_seq")
+            )
+        # computed once, before the first swap: a lazy winners frame would
+        # re-read the entity files that the swap below deletes
+        winners = winners.localCheckpoint()
+        if winners.isEmpty():
+            return
+        tables = shred(winners.filter(F.col("doc").isNotNull()).select("doc.*"))
         edges = tables["edges"]
         root_of = edges.alias("e1").join(
             edges.alias("e2"),
@@ -196,42 +181,13 @@ def run_document_indexer(
         fragments = (
             tables["entities"]
             .join(root_of, "id")
-            .join(seq_of, "root_key")
+            .join(winners.select("root_key", "seq"), "root_key")
             .select("id", "root_key", "seq", "object_type", "payload")
         )
-        # deletes remove the whole document closure by root key
-        delete_roots = latest.filter(F.col("op") == "delete").select(
-            F.col("key").alias("root_key"), "seq"
-        )
-        try:
-            current = spark.read.parquet(entities_dir)
-        except Exception:
-            current = None
-        merged = fragments if current is None else current.unionByName(fragments)
-        # last-writer per fragment id by root seq, then drop deleted roots
-        w2 = Window.partitionBy("id").orderBy(F.col("seq").desc())
-        merged = (
-            merged.withColumn("__rn", F.row_number().over(w2))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        if delete_roots.take(1):
-            kill = delete_roots.select("root_key").distinct()
-            merged = merged.join(kill, "root_key", "left_anti")
-        tmp = f"{entities_dir}__stage_{batch_id}_{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").parquet(tmp)
-        old = f"{entities_dir}__old_{uuid.uuid4().hex[:8]}"
-        if os.path.exists(entities_dir):
-            os.rename(entities_dir, old)
-        os.rename(tmp, entities_dir)
-        if os.path.exists(old):
-            import shutil
-
-            shutil.rmtree(old, ignore_errors=True)
+        _replace(entities_dir, "root_key", winners, fragments, batch_id)
         if reconstructed_dir is not None:
-            refresh_reconstructed(
-                spark, reconstructed_dir, good.select("doc.*"), delete_roots
-            )
+            view = with_etag(reconstruct(tables))
+            _replace(reconstructed_dir, "id", winners, view, batch_id)
 
     stream = (
         spark.readStream.schema(CDC_SCHEMA)
@@ -244,50 +200,3 @@ def run_document_indexer(
         .trigger(availableNow=True)
         .start()
     )
-
-
-def refresh_reconstructed(
-    spark: SparkSession,
-    reconstructed_dir: str,
-    changed_docs: DataFrame,
-    deleted_roots: DataFrame | None,
-) -> None:
-    """Incremental search-projection maintenance: upsert the reconstructed
-    (nested, ETag-stamped) view for CHANGED documents only, drop deleted
-    ones. The Spark analog of the reference's ES index being brought up
-    to date per queue message — but set-oriented per micro-batch, and
-    only touched documents are re-reconstructed, not the corpus.
-    """
-    from adv_big_data_indexing_spark.operators.reconstruct import reconstruct, with_etag
-    from adv_big_data_indexing_spark.operators.shred import shred
-
-    fresh = None
-    if changed_docs is not None and changed_docs.take(1):
-        fresh = with_etag(reconstruct(shred(changed_docs)))
-    try:
-        current = spark.read.parquet(reconstructed_dir)
-    except Exception:
-        current = None
-
-    if current is None:
-        merged = fresh
-    elif fresh is None:
-        merged = current
-    else:
-        replaced_ids = fresh.select("id")
-        merged = current.join(replaced_ids, "id", "left_anti").unionByName(fresh)
-    if merged is None:
-        return
-    if deleted_roots is not None and deleted_roots.take(1):
-        kill = deleted_roots.select(F.col("root_key").alias("id")).distinct()
-        merged = merged.join(kill, "id", "left_anti")
-    tmp = f"{reconstructed_dir}__stage_{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").parquet(tmp)
-    old = f"{reconstructed_dir}__old_{uuid.uuid4().hex[:8]}"
-    if os.path.exists(reconstructed_dir):
-        os.rename(reconstructed_dir, old)
-    os.rename(tmp, reconstructed_dir)
-    if os.path.exists(old):
-        import shutil
-
-        shutil.rmtree(old, ignore_errors=True)

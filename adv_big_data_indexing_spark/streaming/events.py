@@ -324,10 +324,11 @@ def error_click_interval_join(
 
 def index_lag(queue_df: DataFrame, store_df: DataFrame) -> DataFrame:
     """The reference's eventual-consistency observable (README.md:117 —
-    Redis authoritative, index lags): max enqueued seq vs max applied seq
-    per key; lag 0 everywhere == fully caught up."""
+    Redis authoritative, index lags): max enqueued seq per CDC key vs max
+    applied seq per root in the entity store (streaming/cdc.py); lag 0
+    everywhere == fully caught up."""
     q = queue_df.groupBy("key").agg(F.max("seq").alias("enqueued_seq"))
-    s = store_df.groupBy("key").agg(F.max("seq").alias("applied_seq"))
+    s = store_df.groupBy(F.col("root_key").alias("key")).agg(F.max("seq").alias("applied_seq"))
     return (
         q.join(s, "key", "left")
         .select(

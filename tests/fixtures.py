@@ -2,11 +2,17 @@
 test document (src/jsonFile.json:1-49) and FIXTURES.md §A constraints:
 unique objectIds across nesting levels, one parent per child, boundary
 copay values from the reference's query corpus, and the two service
-names its match_phrase tests use ('Yearly physical', 'well baby')."""
+names its match_phrase tests use ('Yearly physical', 'well baby').
+
+The plan schema (draft-04) and the canonical document are vendored under
+tests/data/, the only source the tests read them from."""
 
 from __future__ import annotations
 
 import json
+from pathlib import Path
+
+DATA = Path(__file__).resolve().parent / "data"
 
 COPAY_BOUNDARIES = [-1.0, 0.0, 10.0, 175.0, 178.0]
 SERVICE_NAMES = ["Yearly physical", "well baby", "dental", "vision"]
@@ -55,5 +61,8 @@ def plan_jsons(n: int = 20, n_services: int = 2) -> list[str]:
 
 
 def reference_schema() -> dict:
-    with open("/root/reference/schema.txt") as f:
-        return json.load(f)
+    return json.loads((DATA / "plan_schema.json").read_text())
+
+
+def canonical_plan() -> dict:
+    return json.loads((DATA / "plan.json").read_text())

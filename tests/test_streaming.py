@@ -12,58 +12,141 @@ from pyspark.sql import functions as F
 
 from adv_big_data_indexing_spark.streaming import cdc, events as ev
 from tests.conftest import SF_SMOKE
+from tests.fixtures import make_plan, reference_schema
 
 
-def _doc(i: int, v: int = 0) -> str:
-    return json.dumps({"objectId": f"plan-{i}", "v": v})
+def _rec(i: int, seq: int, doc: dict | None, op: str = "update") -> dict:
+    """A CDC record for ``make_plan(i)``'s key; no ``doc`` is a delete."""
+    return {
+        "key": f"plan_plan-{i:05d}",
+        "op": op if doc is not None else "delete",
+        "seq": seq,
+        "doc": json.dumps(doc) if doc is not None else None,
+    }
+
+
+def _index(spark, root, records=None, ck="ck", view=False) -> None:
+    """Enqueue ``records`` (if any) under ``root`` and drain the queue
+    through the document indexer with checkpoint ``ck``."""
+    if records:
+        cdc.enqueue(spark, str(root / "q"), records)
+    cdc.drain(
+        cdc.run_document_indexer(
+            spark, str(root / "q"), str(root / "e"), str(root / "r"), str(root / ck),
+            reference_schema(), reconstructed_dir=str(root / "v") if view else None,
+        )
+    )
+
+
+def _entities(spark, root) -> list[tuple]:
+    rows = spark.read.parquet(str(root / "e")).collect()
+    return sorted((r.id, r.root_key, r.seq, r.object_type, r.payload) for r in rows)
+
+
+def _payload(spark, root, entity_id: str) -> dict:
+    rows = spark.read.parquet(str(root / "e")).filter(F.col("id") == entity_id).collect()
+    assert len(rows) == 1, rows
+    return json.loads(rows[0].payload)
+
+
+def _renumbered(i: int, tag: str, n_services: int = 1) -> dict:
+    """``make_plan(i)`` whose children all carry new objectIds."""
+    doc = make_plan(i, n_services)
+    doc["planCostShares"]["objectId"] += tag
+    for ps in doc["linkedPlanServices"]:
+        for part in (ps, ps["linkedService"], ps["planserviceCostShares"]):
+            part["objectId"] += tag
+    return doc
 
 
 def test_cdc_insert_update_delete(spark, tmp_path):
-    q, s, c = str(tmp_path / "q"), str(tmp_path / "store"), str(tmp_path / "ck")
-    cdc.enqueue(spark, q, [
-        {"key": "plan_1", "op": "insert", "seq": 1, "doc": _doc(1)},
-        {"key": "plan_2", "op": "insert", "seq": 1, "doc": _doc(2)},
+    _index(spark, tmp_path, [
+        _rec(1, 1, make_plan(1), "insert"),
+        _rec(2, 1, make_plan(2), "insert"),
     ])
-    cdc.drain(cdc.run_indexer(spark, q, s, c))
-    got = {r.key: r for r in cdc.read_store(spark, s).collect()}
-    assert set(got) == {"plan_1", "plan_2"}
+    assert {e[1] for e in _entities(spark, tmp_path)} == {"plan_plan-00001", "plan_plan-00002"}
 
-    cdc.enqueue(spark, q, [
-        {"key": "plan_1", "op": "update", "seq": 2, "doc": _doc(1, v=9)},
-        {"key": "plan_2", "op": "delete", "seq": 2, "doc": None},
-        {"key": "plan_3", "op": "insert", "seq": 1, "doc": _doc(3)},
+    p1 = make_plan(1)
+    p1["planType"] = "CHANGED"
+    _index(spark, tmp_path, [
+        _rec(1, 2, p1),
+        _rec(2, 2, None),
+        _rec(3, 1, make_plan(3), "insert"),
     ])
-    cdc.drain(cdc.run_indexer(spark, q, s, c))
-    got = {r.key: r for r in cdc.read_store(spark, s).collect()}
-    assert set(got) == {"plan_1", "plan_3"}
-    assert json.loads(got["plan_1"].doc)["v"] == 9
+    assert {e[1] for e in _entities(spark, tmp_path)} == {"plan_plan-00001", "plan_plan-00003"}
+    assert _payload(spark, tmp_path, "plan_plan-00001")["planType"] == "CHANGED"
 
 
 def test_cdc_replay_idempotent(spark, tmp_path):
     """At-least-once delivery: replaying the whole queue from a fresh
     checkpoint must converge to the same store state (the reference gets
-    this from ES upsert-by-_id; we get it from max-seq merge)."""
-    q, s, c1 = str(tmp_path / "q"), str(tmp_path / "store"), str(tmp_path / "ck1")
-    recs = [
-        {"key": "k1", "op": "insert", "seq": 1, "doc": _doc(1)},
-        {"key": "k1", "op": "update", "seq": 2, "doc": _doc(1, v=5)},
-        {"key": "k2", "op": "insert", "seq": 1, "doc": _doc(2)},
-    ]
-    cdc.enqueue(spark, q, recs)
-    cdc.drain(cdc.run_indexer(spark, q, s, c1))
-    state1 = sorted((r.key, r.seq, r.doc) for r in cdc.read_store(spark, s).collect())
+    this from ES upsert-by-_id; we get it from the max-seq replace)."""
+    p1 = make_plan(1)
+    p1["planType"] = "v5"
+    _index(spark, tmp_path, [
+        _rec(1, 1, make_plan(1), "insert"),
+        _rec(1, 2, p1),
+        _rec(2, 1, make_plan(2), "insert"),
+    ], ck="ck1")
+    state1 = _entities(spark, tmp_path)
+    assert _payload(spark, tmp_path, "plan_plan-00001")["planType"] == "v5"
+    # replay: new checkpoint → the source re-delivers every file. (A late
+    # duplicate of an old seq: test_late_lower_seq_update_changes_neither_store.)
+    _index(spark, tmp_path, ck="ck2")
+    assert _entities(spark, tmp_path) == state1
 
-    # replay: new checkpoint → the source re-delivers every file
-    c2 = str(tmp_path / "ck2")
-    cdc.drain(cdc.run_indexer(spark, q, s, c2))
-    state2 = sorted((r.key, r.seq, r.doc) for r in cdc.read_store(spark, s).collect())
-    assert state1 == state2
 
-    # out-of-order late duplicate of an old seq must not regress the row
-    cdc.enqueue(spark, q, [{"key": "k1", "op": "update", "seq": 1, "doc": _doc(1, v=0)}])
-    cdc.drain(cdc.run_indexer(spark, q, s, c1))
-    got = {r.key: json.loads(r.doc)["v"] for r in cdc.read_store(spark, s).collect()}
-    assert got["k1"] == 5
+def test_update_with_new_child_ids_replaces_closure(spark, tmp_path):
+    """An update whose children carry new objectIds leaves exactly the new
+    document's fragments: the old children go with the old closure."""
+    from adv_big_data_indexing_spark.operators.shred import shred
+    from adv_big_data_indexing_spark.plans.json_schema_compiler import validate
+
+    _index(spark, tmp_path, [_rec(0, 1, make_plan(0), "insert")])
+    new = _renumbered(0, "-b")
+    _index(spark, tmp_path, [_rec(0, 2, new)])
+
+    raw = spark.createDataFrame([(json.dumps(new),)], "raw string")
+    want = shred(validate(raw, reference_schema()).select("doc.*"))["entities"]
+    assert [(e[0], e[4]) for e in _entities(spark, tmp_path)] == sorted(
+        (r.id, r.payload) for r in want.collect()
+    )
+    assert {e[2] for e in _entities(spark, tmp_path)} == {2}
+
+
+def test_late_lower_seq_update_changes_neither_store(spark, tmp_path):
+    """A late update with a lower seq than the stored one is ignored by the
+    entity store AND the view: both keep serving the newer version."""
+    newer = make_plan(0)
+    newer["planType"] = "v1"
+    _index(spark, tmp_path, [_rec(0, 1, make_plan(0), "insert"), _rec(0, 3, newer)], view=True)
+    _index(spark, tmp_path, [_rec(0, 2, make_plan(0))], view=True)
+
+    assert _payload(spark, tmp_path, "plan_plan-00000")["planType"] == "v1"
+    assert {e[2] for e in _entities(spark, tmp_path)} == {3}
+    view = spark.read.parquet(str(tmp_path / "v")).collect()
+    assert [(r.id, r.planType) for r in view] == [("plan_plan-00000", "v1")]
+
+
+def test_replay_from_fresh_checkpoint_reproduces_both_stores(spark, tmp_path):
+    """A replay of the whole queue from a fresh checkpoint gives the same
+    entity rows and the same view ETags as the incremental drains that
+    built them, including a child-id change, a delete and a late update."""
+    _index(spark, tmp_path, [
+        _rec(0, 1, make_plan(0), "insert"),
+        _rec(1, 1, make_plan(1), "insert"),
+        _rec(0, 3, _renumbered(0, "-b")),
+    ], view=True)
+    _index(spark, tmp_path, [_rec(0, 2, make_plan(0)), _rec(1, 2, None)], view=True)
+
+    def etags():
+        return sorted((r.id, r.etag) for r in spark.read.parquet(str(tmp_path / "v")).collect())
+
+    ents, tags = _entities(spark, tmp_path), etags()
+    assert {e[1] for e in ents} == {"plan_plan-00000"} and len(tags) == 1
+    _index(spark, tmp_path, ck="ck-replay", view=True)
+    assert _entities(spark, tmp_path) == ents
+    assert etags() == tags
 
 
 @pytest.fixture(scope="module")
@@ -157,8 +240,6 @@ def test_stateful_user_stats(spark, event_stream_dir):
 def test_document_indexer_end_to_end(spark, tmp_path):
     """The reference's whole POST /plan choreography as one streaming
     job: validate → 400-split → shred → keyed merge → delete closure."""
-    from tests.fixtures import make_plan, reference_schema
-
     q = str(tmp_path / "q"); ents = str(tmp_path / "entities")
     rej = str(tmp_path / "rejects"); ck = str(tmp_path / "ck")
     schema = reference_schema()
@@ -210,28 +291,28 @@ def test_stream_stream_interval_join(spark, event_stream_dir):
 
 
 def test_index_lag_observable(spark, tmp_path):
-    q, s, c = str(tmp_path / "q"), str(tmp_path / "store"), str(tmp_path / "ck")
-    cdc.enqueue(spark, q, [
-        {"key": "k1", "op": "insert", "seq": 1, "doc": _doc(1)},
-        {"key": "k2", "op": "insert", "seq": 1, "doc": _doc(2)},
+    _index(spark, tmp_path, [
+        _rec(1, 1, make_plan(1), "insert"),
+        _rec(2, 1, make_plan(2), "insert"),
     ])
-    cdc.drain(cdc.run_indexer(spark, q, s, c))
     # enqueue more WITHOUT draining → lag appears
-    cdc.enqueue(spark, q, [{"key": "k1", "op": "update", "seq": 3, "doc": _doc(1, v=1)}])
-    queue_df = spark.read.schema(cdc.CDC_SCHEMA).json(q)
-    lag = {r.key: r.lag for r in ev.index_lag(queue_df, cdc.read_store(spark, s)).collect()}
-    assert lag == {"k1": 2, "k2": 0}
+    cdc.enqueue(spark, str(tmp_path / "q"), [_rec(1, 3, make_plan(1))])
+    queue_df = spark.read.schema(cdc.CDC_SCHEMA).json(str(tmp_path / "q"))
+
+    def lag():
+        store = spark.read.parquet(str(tmp_path / "e"))
+        return {r.key: r.lag for r in ev.index_lag(queue_df, store).collect()}
+
+    assert lag() == {"plan_plan-00001": 2, "plan_plan-00002": 0}
     # drain → lag closes
-    cdc.drain(cdc.run_indexer(spark, q, s, c))
-    lag = {r.key: r.lag for r in ev.index_lag(queue_df, cdc.read_store(spark, s)).collect()}
-    assert lag == {"k1": 0, "k2": 0}
+    _index(spark, tmp_path)
+    assert lag() == {"plan_plan-00001": 0, "plan_plan-00002": 0}
 
 
 def test_incremental_reconstructed_projection(spark, tmp_path):
     """The search projection (reconstructed + ETag view) stays in sync
     incrementally: only changed docs re-reconstruct, deletes drop out,
     and the store always equals a from-scratch reconstruction."""
-    from tests.fixtures import make_plan, reference_schema
     from adv_big_data_indexing_spark.operators.reconstruct import reconstruct, with_etag
     from adv_big_data_indexing_spark.operators.shred import shred
     from adv_big_data_indexing_spark.plans.json_schema_compiler import validate
